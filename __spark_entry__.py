@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from shaclapi_spark import fixture_io, fixtures, oracle
 from shaclapi_spark import verdicts as V
 from shaclapi_spark.datagen import fixture_n_clips
-from shaclapi_spark.engine import EngineConfig, run_suite
+from shaclapi_spark.engine import run_suite
 from shaclapi_spark.ops import diff as diff_ops
 from shaclapi_spark.ops import drift as drift_ops
 from shaclapi_spark.ops import privacy as privacy_ops
@@ -74,8 +74,6 @@ def _clips_pq(table: str) -> str:
     path = fixture_io.fixture_paths(_ORACLE_N)[table]
     return f"read_parquet('{path}')"
 
-
-_CFG = EngineConfig(short_circuit=True)
 
 # stopword list literals shared between Spark and oracle text queries
 _STOP_EN = tx.LANG_PROFILES["en"]
@@ -175,7 +173,7 @@ def _tpch_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def q_clip_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _clip_tables(spark, sf_dir)
     res = run_suite(
-        spark, fixtures.clip_suite(include_audio=True, include_drift=False), t, config=_CFG
+        spark, fixtures.clip_suite(include_audio=True, include_drift=False), t
     )
     return res.verdicts.select("entity_id", "shape", "is_valid")
 
@@ -191,7 +189,6 @@ def q_clip_verdicts_pop(spark: SparkSession, sf_dir: str) -> DataFrame:
         t,
         target_shapes=["ClipShape"],
         target_population="codec = 'flac'",
-        config=_CFG,
     )
     return res.verdicts.filter(F.col("shape") == "ClipShape").select(
         "entity_id", "shape", "is_valid"
@@ -201,7 +198,7 @@ def q_clip_verdicts_pop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_clip_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _clip_tables(spark, sf_dir)
     res = run_suite(
-        spark, fixtures.clip_suite(include_audio=True, include_drift=False), t, config=_CFG
+        spark, fixtures.clip_suite(include_audio=True, include_drift=False), t
     )
     return res.violations.select("entity_id", "shape", "constraint_id")
 
@@ -219,7 +216,6 @@ def q_clips_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         t,
         "ClipShape",
         "clip_id",
-        config=_CFG,
     )
     return quar.select("clip_id", "codec", "n_violations", "reasons")
 
@@ -232,7 +228,7 @@ def q_shacl_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _clip_tables(spark, sf_dir)
     suite = fixtures.clip_suite(include_audio=True, include_drift=False)
-    res = run_suite(spark, suite, t, config=_CFG)
+    res = run_suite(spark, suite, t)
     return report.validation_report(res.violations, suite).select(
         "focus_node", "source_shape", "constraint_id", "component", "severity"
     )
@@ -245,7 +241,7 @@ def q_violation_evidence_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _clip_tables(spark, sf_dir)
     suite = fixtures.clip_suite(include_audio=False, include_drift=False)
-    res = run_suite(spark, suite, t, config=_CFG)
+    res = run_suite(spark, suite, t)
     ev = explain.violation_evidence(
         spark, suite, t, res.violations, constraint_ids=["tr_fk"]
     )
@@ -272,14 +268,14 @@ def q_verdict_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_clip_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _clip_tables(spark, sf_dir)
     res = run_suite(
-        spark, fixtures.clip_suite(include_audio=True, include_drift=False), t, config=_CFG
+        spark, fixtures.clip_suite(include_audio=True, include_drift=False), t
     )
     return res.summary
 
 
 def q_clip_cycle_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _clip_tables(spark, sf_dir)
-    res = run_suite(spark, fixtures.clip_cycle_suite(), t, config=_CFG)
+    res = run_suite(spark, fixtures.clip_cycle_suite(), t)
     return res.verdicts.select("entity_id", "shape", "is_valid")
 
 
@@ -304,7 +300,7 @@ def q_fdep_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    res = run_suite(spark, suite, t, config=_CFG)
+    res = run_suite(spark, suite, t)
     return res.verdicts.select("entity_id", "shape", "is_valid", "reason")
 
 
@@ -342,7 +338,7 @@ def q_reconcile_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "orders": _t(spark, sf_dir, "orders"),
         "lineitem": _t(spark, sf_dir, "lineitem"),
     }
-    res = run_suite(spark, suite, tables, config=_CFG)
+    res = run_suite(spark, suite, tables)
     return res.verdicts.select("entity_id", "shape", "is_valid", "reason")
 
 
@@ -386,7 +382,7 @@ def q_stat_bound_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    res = run_suite(spark, suite, t, config=_CFG)
+    res = run_suite(spark, suite, t)
     return res.verdicts.filter(F.col("entity_id") == "__dataset__").select(
         "entity_id", "shape", "is_valid", "reason"
     )
@@ -420,7 +416,7 @@ def q_monotonic_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    res = run_suite(spark, suite, {"events": events}, config=_CFG)
+    res = run_suite(spark, suite, {"events": events})
     return res.verdicts.select("entity_id", "shape", "is_valid", "reason")
 
 
@@ -457,7 +453,7 @@ def q_blocklist_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    res = run_suite(spark, suite, t, config=_CFG)
+    res = run_suite(spark, suite, t)
     return res.verdicts.select("entity_id", "shape", "is_valid", "reason")
 
 
@@ -482,9 +478,9 @@ def q_incremental_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     old, new = _mutated_clip_versions(spark, sf_dir)
     suite = fixtures.clip_suite(include_audio=True, include_drift=False)
-    old_res = run_suite(spark, suite, old, config=_CFG)
+    old_res = run_suite(spark, suite, old)
     inc = revalidate.revalidate_incremental(
-        spark, suite, old, new, old_res.verdicts, config=_CFG
+        spark, suite, old, new, old_res.verdicts
     )
     return inc.verdicts.select("entity_id", "shape", "is_valid")
 
@@ -502,9 +498,9 @@ def q_incremental_changelog_verdicts(spark: SparkSession, sf_dir: str) -> DataFr
         t: revalidate.synthesize_changelog(old[t], new[t])
         for t in ("clips", "transcripts")
     }
-    old_res = run_suite(spark, suite, old, config=_CFG)
+    old_res = run_suite(spark, suite, old)
     inc = revalidate.revalidate_incremental_from_changelogs(
-        spark, suite, cls, new, old_res.verdicts, config=_CFG
+        spark, suite, cls, new, old_res.verdicts
     )
     return inc.verdicts.select("entity_id", "shape", "is_valid")
 
@@ -514,8 +510,8 @@ def q_verdict_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     # versions — the promotion-gate readout (ops/diff.verdict_diff)
     old, new = _mutated_clip_versions(spark, sf_dir)
     suite = fixtures.clip_suite(include_audio=True, include_drift=False)
-    old_v = run_suite(spark, suite, old, config=_CFG).verdicts
-    new_v = run_suite(spark, suite, new, config=_CFG).verdicts
+    old_v = run_suite(spark, suite, old).verdicts
+    new_v = run_suite(spark, suite, new).verdicts
     return diff_ops.verdict_diff_summary(old_v, new_v)
 
 
@@ -559,7 +555,7 @@ def q_drift_hist_dur(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tpch_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = run_suite(spark, _tpch_suite(), _tpch_tables(spark, sf_dir), config=_CFG)
+    res = run_suite(spark, _tpch_suite(), _tpch_tables(spark, sf_dir))
     return res.verdicts.select("entity_id", "shape", "is_valid")
 
 
@@ -1627,7 +1623,7 @@ def q_image_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # constraints (fixtures.image_suite) — zero UDFs in the constraint
     # path, first-fail reason attribution like every other shape
     images, _ = _av_tables(spark, sf_dir)
-    res = run_suite(spark, fixtures.image_suite(), {"images": images}, config=_CFG)
+    res = run_suite(spark, fixtures.image_suite(), {"images": images})
     return res.verdicts.select("entity_id", "shape", "is_valid", "reason")
 
 
@@ -1703,7 +1699,7 @@ def q_video_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the constraint engine validating the video table: SGV1 integrity +
     # frame-count-vs-catalog-metadata as pure-builtin expr constraints
     _, videos = _av_tables(spark, sf_dir)
-    res = run_suite(spark, fixtures.video_suite(), {"videos": videos}, config=_CFG)
+    res = run_suite(spark, fixtures.video_suite(), {"videos": videos})
     return res.verdicts.select("entity_id", "shape", "is_valid", "reason")
 
 
@@ -1807,7 +1803,7 @@ def q_cer_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    res = run_suite(spark, s, {"transcripts": t["transcripts"], "clips": t["clips"]}, config=_CFG)
+    res = run_suite(spark, s, {"transcripts": t["transcripts"], "clips": t["clips"]})
     return res.verdicts.select("entity_id", "shape", "is_valid", "reason")
 
 
@@ -1929,9 +1925,9 @@ def entry(spark: SparkSession) -> DataFrame:
     sf_dir = "/root/testdata/sf0.001"
     t = _clip_tables(spark, sf_dir)
     clip_res = run_suite(
-        spark, fixtures.clip_suite(include_audio=True, include_drift=True), t, config=_CFG
+        spark, fixtures.clip_suite(include_audio=True, include_drift=True), t
     )
-    tpch_res = run_suite(spark, _tpch_suite(), _tpch_tables(spark, sf_dir), config=_CFG)
+    tpch_res = run_suite(spark, _tpch_suite(), _tpch_tables(spark, sf_dir))
     return clip_res.verdicts.unionByName(tpch_res.verdicts)
 
 

@@ -75,7 +75,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from shaclapi_spark import datagen, fixtures
-    from shaclapi_spark.engine import EngineConfig, run_suite
+    from shaclapi_spark.engine import run_suite
     from shaclapi_spark.ops import stats as stats_ops
     from shaclapi_spark.pipeline import dedup as dd
     import __spark_entry__ as entry_mod
@@ -84,7 +84,6 @@ def main() -> None:
     bench_root = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_fixtures")
     paths = datagen.ensure_fixture(spark, os.path.join(bench_root, f"n{n_clips}"), n_clips)
     tables = {name: spark.read.parquet(p) for name, p in paths.items()}
-    cfg = EngineConfig(short_circuit=True)
 
     sentinel_start = noise_sentinel()
 
@@ -128,7 +127,6 @@ def main() -> None:
             spark,
             fixtures.clip_suite(include_audio=True, include_drift=True),
             {**tables, "clips": tables["clips"].limit(20000)},
-            config=cfg,
         ).verdicts
     )
 
@@ -140,7 +138,6 @@ def main() -> None:
                 spark,
                 fixtures.clip_suite(include_audio=True, include_drift=True),
                 tables,
-                config=cfg,
             ).verdicts
         ),
     )
@@ -151,7 +148,6 @@ def main() -> None:
                 spark,
                 fixtures.clip_suite(include_audio=True, include_drift=False),
                 tables,
-                config=cfg,
             ).summary
         ),
     )
@@ -180,7 +176,7 @@ def main() -> None:
         )
         new_clips.write.mode("overwrite").parquet(os.path.join(inc_root, "clips"))
         new_tr.write.mode("overwrite").parquet(os.path.join(inc_root, "transcripts"))
-        run_suite(spark, inc_suite, tables, config=cfg).verdicts.write.mode(
+        run_suite(spark, inc_suite, tables).verdicts.write.mode(
             "overwrite"
         ).parquet(os.path.join(inc_root, "verdicts_v1"))
         with open(os.path.join(inc_root, "_INC_OK"), "w") as fh:
@@ -195,7 +191,7 @@ def main() -> None:
         "incremental_reval",
         lambda: force(
             rv.revalidate_incremental(
-                spark, inc_suite, tables, inc_new, inc_old_verdicts, config=cfg
+                spark, inc_suite, tables, inc_new, inc_old_verdicts
             ).verdicts
         ),
     )

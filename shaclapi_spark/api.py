@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from shaclapi_spark.compiler import compile_suite
-from shaclapi_spark.engine import EngineConfig, SuiteResult, run_suite
+from shaclapi_spark.engine import SuiteResult, run_suite
 from shaclapi_spark.suite import Suite
 
 
@@ -30,7 +30,6 @@ def run(
     tables: dict[str, DataFrame],
     target_shapes: list[str] | None = None,
     relevant_columns: set[str] | None = None,
-    config: EngineConfig | None = None,
     target_population: "str | DataFrame | None" = None,
     order_strategy: str = "heuristic",
     seed_shape: str | None = None,
@@ -75,7 +74,6 @@ def run(
                 targets[0],
                 out_dir,
                 n_waves=n_waves,
-                config=config,
             )
         except ValueError as e:
             if "cyclic" not in str(e):
@@ -87,7 +85,6 @@ def run(
         tables,
         target_shapes=target_shapes,
         relevant_columns=relevant_columns,
-        config=config,
         target_population=target_population,
         order_strategy=order_strategy,
         seed_shape=seed_shape,
@@ -99,14 +96,11 @@ def validation_summary(
     suite: Suite,
     tables: dict[str, DataFrame],
     target_shapes: list[str] | None = None,
-    config: EngineConfig | None = None,
 ) -> dict:
     """POST /validation analog: {shape: {valid: n, invalid: n}} plus the
     verdict DataFrame for callers that want rows (api.py:372-387 drains the
     queue into exactly this structure)."""
-    res = run_suite(
-        spark, suite, tables, target_shapes=target_shapes, config=config
-    )
+    res = run_suite(spark, suite, tables, target_shapes=target_shapes)
     counts = (
         res.verdicts.groupBy("shape")
         .agg(
@@ -181,7 +175,6 @@ def enforce(
     tables: dict[str, DataFrame],
     shape_name: str,
     id_col: str,
-    config: EngineConfig | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The pipeline ending validation exists for: split a shape's table
     into ``(clean, quarantine)`` by its per-entity verdicts — the
@@ -191,10 +184,10 @@ def enforce(
     ``clean`` is the input table minus invalid entities (anti-join on the
     invalid id set — the dominant valid population never shuffles);
     ``quarantine`` is the invalid rows annotated with ``n_violations``
-    and ``reasons`` (comma-joined sorted distinct constraint ids — under
-    short-circuit evaluation this lists the RECORDED failures, which may
-    be a prefix of all failures; run with short_circuit=False for the
-    exhaustive list). Dataset-level verdicts (``__dataset__`` rows, e.g.
+    and ``reasons`` (comma-joined sorted distinct constraint ids of the
+    RECORDED failures: the audio decode is skipped for rows that already
+    fail a top-level row check, so an audio failure is not listed beside
+    a cheaper one). Dataset-level verdicts (``__dataset__`` rows, e.g.
     drift) describe the whole table, not a row, and never quarantine
     rows — read them off :func:`run`'s result instead.
 
@@ -203,9 +196,7 @@ def enforce(
     mandated by the training-pipeline brief (quarantined rows feed the
     curation audit; clean rows feed the writer)."""
     shape = suite.shape(shape_name)
-    res = run_suite(
-        spark, suite, tables, target_shapes=[shape_name], config=config
-    )
+    res = run_suite(spark, suite, tables, target_shapes=[shape_name])
     table = tables[shape.table]
     # both derived relations are bounded by the invalid-entity count and
     # are eagerly checkpointed, so validation runs exactly twice HERE

@@ -44,19 +44,9 @@ from shaclapi_spark.suite import (
 )
 
 
-@dataclass
-class EngineConfig:
-    n_buckets: int = 64
-    short_circuit: bool = True          # early-fail: skip audio decode for rows already invalid
-    max_fixpoint_iters: int = 10
-    cache_shared_verdicts: bool = True  # persist verdicts reused by dependent shapes
-    min_snr_db: float = 30.0
-    # fk_match equality via xxhash64 of both sides: the parent agg and the
-    # child-side join then shuffle fixed 8-byte hashes instead of raw payload
-    # values (transcripts are ~100-300 B each — at 10^12 rows the raw-string
-    # min/max shuffle IS the job). False-accept probability per comparison is
-    # ~2^-64 (xxhash64 collision); set False for exact raw-value comparison.
-    fk_match_by_hash: bool = True
+# rounds a cyclic group may take to reach its fixpoint before run_suite
+# raises instead of publishing unconverged verdicts
+MAX_FIXPOINT_ITERS = 10
 
 
 @dataclass
@@ -72,7 +62,7 @@ def _bool_col(name: str) -> Column:
     return F.coalesce(F.col(name), F.lit(True))  # unbound ⇒ valid
 
 
-class _ShapeEvaluator:
+class ShapeEvaluator:
     """Builds the DataFrame plan for one shape given prerequisite verdicts."""
 
     def __init__(
@@ -81,7 +71,6 @@ class _ShapeEvaluator:
         shape: Shape,
         tables: dict[str, DataFrame],
         prereq_verdicts: dict[str, DataFrame],
-        config: EngineConfig,
         entity_col_by_shape: dict[str, str] | None = None,
         population: DataFrame | None = None,
     ):
@@ -89,7 +78,6 @@ class _ShapeEvaluator:
         self.shape = shape
         self.tables = tables
         self.prereq = prereq_verdicts
-        self.cfg = config
         self._ref_entity_cols = entity_col_by_shape or {}
         # entity-id restriction (one column `__pop_id`): validate only these
         # entities — the batch analog of the reference's replaced target query
@@ -185,14 +173,13 @@ class _ShapeEvaluator:
         for c in self.audio_cs:
             name = f"b_{c.id}"
             pre = F.lit(True)
-            if self.cfg.short_circuit:
-                for rb in precond_names:
-                    pre = pre & _bool_col(rb)
+            for rb in precond_names:
+                pre = pre & _bool_col(rb)
             df = audio_ops.with_audio_check(
                 df,
                 name,
                 c.params["column"],
-                float(c.params.get("min_snr_db", self.cfg.min_snr_db)),
+                float(c.params.get("min_snr_db", audio_ops.MIN_SNR_DB)),
                 precondition=pre,
             )
 
@@ -208,7 +195,7 @@ class _ShapeEvaluator:
 
         # ---- narrow projection: everything after this point shuffles (parent
         # joins, entity groupBy) — keep only the entity id, join keys, the
-        # fk_match comparison values (hashed to 8 bytes by default), and the
+        # fk_match comparison values (hashed to 8 bytes), and the
         # boolean columns. Payload columns (audio bytes, transcript text)
         # never cross a shuffle.
         fk_keys = set()
@@ -232,17 +219,15 @@ class _ShapeEvaluator:
                 continue
             if c.kind != "fk_match":
                 continue
+            # fk_match equality via xxhash64 of both sides: the parent agg
+            # and this join shuffle fixed 8-byte hashes instead of raw
+            # payload values (transcripts are ~100-300 B each). False-accept
+            # probability per comparison is ~2^-64 (xxhash64 collision).
             raw = F.col(c.params["column"])
-            if self.cfg.fk_match_by_hash:
-                proj.append(
-                    F.when(raw.isNotNull(), F.xxhash64(raw)).alias(f"__lh_{c.id}")
-                )
-                match_col[c.id] = F.col(f"__lh_{c.id}")
-            else:
-                if c.params["column"] not in keep:
-                    keep.add(c.params["column"])
-                    proj.append(raw)
-                match_col[c.id] = raw
+            proj.append(
+                F.when(raw.isNotNull(), F.xxhash64(raw)).alias(f"__lh_{c.id}")
+            )
+            match_col[c.id] = F.col(f"__lh_{c.id}")
         # functional_dep carries xxhash64(column) (8 B per row) across the
         # entity groupBy instead of the raw value — constancy is decidable
         # from the hash alone (min==max), and payload-width columns
@@ -293,15 +278,11 @@ class _ShapeEvaluator:
                     # the shuffle over the big parent):  count == 0 ⇒ vacuous,
                     # min == max ⇒ exactly one distinct value ⇒ compare,
                     # min != max ⇒ >=2 distinct values ⇒ unsatisfiable.
-                    # By default the aggregated value is xxhash64(parent_col):
-                    # the parent shuffle carries 3×8 B per key instead of two
-                    # raw payload values (see EngineConfig.fk_match_by_hash).
+                    # The aggregated value is xxhash64(parent_col): the
+                    # parent shuffle carries 3×8 B per key instead of two
+                    # raw payload values.
                     pv_raw = F.col(c.params["parent_col"])
-                    pv_val = (
-                        F.when(pv_raw.isNotNull(), F.xxhash64(pv_raw))
-                        if self.cfg.fk_match_by_hash
-                        else pv_raw
-                    )
+                    pv_val = F.when(pv_raw.isNotNull(), F.xxhash64(pv_raw))
                     aggs.append(F.count(pv_val).alias(f"__pnn_{c.id}"))
                     aggs.append(F.min(pv_val).alias(f"__plo_{c.id}"))
                     aggs.append(F.max(pv_val).alias(f"__pv_{c.id}"))
@@ -458,7 +439,7 @@ class _ShapeEvaluator:
                     (
                         c.params["shape"],
                         c.params.get("ref_key")
-                        or self._ref_entity_col(c.params["shape"], child_name),
+                        or self._ref_entity_cols[c.params["shape"]],
                     )
                     for c in cs
                     if c.kind == "qualified_shape"
@@ -493,9 +474,7 @@ class _ShapeEvaluator:
                     )
                 if c.kind == "qualified_shape":
                     rs = c.params["shape"]
-                    rk = c.params.get("ref_key") or self._ref_entity_col(
-                        rs, child_name
-                    )
+                    rk = c.params.get("ref_key") or self._ref_entity_cols[rs]
                     cond = cond & F.coalesce(
                         F.col(f"__v_{rs}_{rk}"), F.lit(True)
                     )
@@ -594,11 +573,6 @@ class _ShapeEvaluator:
                 )
 
         return ent, bools
-
-    def _ref_entity_col(self, ref_shape: str, child_table: str) -> str:
-        """Join key for a qualified ref: the referenced shape's entity column
-        (the referenced shape's table is the child table)."""
-        return self._ref_entity_cols[ref_shape]
 
     def evaluate(self) -> tuple[DataFrame, DataFrame]:
         ent, bools = self.entity_bools()
@@ -704,7 +678,6 @@ def run_suite(
     tables: dict[str, DataFrame],
     target_shapes: list[str] | None = None,
     relevant_columns: set[str] | None = None,
-    config: EngineConfig | None = None,
     prune: bool = True,
     preseeded_verdicts: dict[str, DataFrame] | None = None,
     target_population: "str | DataFrame | dict | None" = None,
@@ -751,7 +724,6 @@ def run_suite(
     cyclic fixpoint runs unrestricted, as before.
 
     ``order_strategy`` / ``seed_shape``: see compiler.evaluation_order."""
-    cfg = config or EngineConfig()
     targets = target_shapes or suite.names()
     reduced, groups = compile_suite(
         suite,
@@ -780,12 +752,11 @@ def run_suite(
         prereq: dict[str, DataFrame],
         population: DataFrame | None = None,
     ):
-        ev = _ShapeEvaluator(
+        ev = ShapeEvaluator(
             spark,
             shape_by_name[name],
             tables,
             prereq,
-            cfg,
             entity_col_by_shape,
             population=(
                 population if population is not None else pop_by_shape.get(name)
@@ -799,7 +770,7 @@ def run_suite(
         if not group.cyclic:
             name = group.shapes[0]
             vd, vl = eval_one(name, verdicts_by_shape)
-            if cfg.cache_shared_verdicts and _is_referenced(reduced, name):
+            if _is_referenced(reduced, name):
                 vd = vd.persist()
             verdicts_by_shape[name] = vd
             violations_by_shape[name] = vl
@@ -864,7 +835,7 @@ def run_suite(
             current = {n: init_valid(n) for n in group.shapes}
             fps = {n: None for n in group.shapes}
             last_viol: dict[str, DataFrame] = {}
-            for _ in range(cfg.max_fixpoint_iters):
+            for _ in range(MAX_FIXPOINT_ITERS):
                 prereq = dict(verdicts_by_shape)
                 for n in group.shapes:
                     prereq[n] = (
@@ -888,6 +859,11 @@ def run_suite(
                 current = new
                 if not changed:
                     break
+            else:
+                raise ValueError(
+                    f"fixpoint over shape group {group.shapes} did not "
+                    f"converge in {MAX_FIXPOINT_ITERS} rounds"
+                )
             for n in group.shapes:
                 # seeded runs must publish the MERGED relation (seed for
                 # unaffected entities ∪ fresh slice): downstream shapes
@@ -940,7 +916,7 @@ def run_suite(
         [violations_by_shape[n] for n in keep]
         + [d for d in (drift_vl, sb_vl) if d is not None]
     )
-    summary = V.summarize(verdicts, cfg.n_buckets)
+    summary = V.summarize(verdicts)
     return SuiteResult(
         verdicts=verdicts,
         violations=violations,

@@ -25,7 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import Observation, SparkSession, functions as F
 
 from shaclapi_spark import verdicts as V
-from shaclapi_spark.engine import EngineConfig, run_suite
+from shaclapi_spark.engine import run_suite
 from shaclapi_spark.metrics import MetricsRecorder
 from shaclapi_spark.suite import Suite
 
@@ -65,12 +65,10 @@ def run_with_lineage(
     target_shape: str,
     out_dir: str,
     n_waves: int = 8,
-    config: EngineConfig | None = None,
 ) -> LineageRun:
     """Validate `target_shape` in `n_waves` hash-bucket waves with a resume
     manifest. Output layout: {out_dir}/verdicts/wave=K/, violations/wave=K/,
     summary/wave=K/, _manifest.jsonl."""
-    cfg = config or EngineConfig()
     os.makedirs(out_dir, exist_ok=True)
     t0 = time.time()
     done = completed_waves(out_dir)
@@ -111,7 +109,7 @@ def run_with_lineage(
     preseeded = {}
     if helper_names:
         helper_res = run_suite(
-            spark, wave_suite, tables, target_shapes=helper_names, config=cfg
+            spark, wave_suite, tables, target_shapes=helper_names
         )
         preseeded = {
             n: df.persist()
@@ -137,7 +135,6 @@ def run_with_lineage(
                 wave_suite,
                 wave_tables,
                 target_shapes=[target_shape],
-                config=cfg,
                 preseeded_verdicts=preseeded,
             )
             # row count piggybacks on the write job via the Observation API —

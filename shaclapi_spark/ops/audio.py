@@ -20,6 +20,9 @@ from pyspark.sql.types import DoubleType
 
 from shaclapi_spark import audio_codec
 
+# default SNR threshold of an audio_valid constraint without `min_snr_db`
+MIN_SNR_DB = 30.0
+
 
 @pandas_udf(DoubleType())
 def _snr_db_udf(blobs: pd.Series, precond: pd.Series) -> pd.Series:
@@ -45,7 +48,7 @@ def with_audio_check(
     df: DataFrame,
     out_col: str,
     bytes_col: str,
-    min_snr_db: float = 30.0,
+    min_snr_db: float = MIN_SNR_DB,
     precondition: Column | None = None,
 ) -> DataFrame:
     """Adds boolean ``out_col``: True iff decode succeeds and SNR ≥ threshold.

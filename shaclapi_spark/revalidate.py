@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from shaclapi_spark import verdicts as V
 from shaclapi_spark.compiler import compile_suite
-from shaclapi_spark.engine import EngineConfig, SuiteResult, run_suite
+from shaclapi_spark.engine import SuiteResult, run_suite
 from shaclapi_spark.suite import Constraint, Suite
 
 
@@ -341,7 +341,6 @@ def revalidate_incremental(
     old_verdicts: DataFrame,
     old_violations: DataFrame | None = None,
     target_shapes: list[str] | None = None,
-    config: EngineConfig | None = None,
     compare_cols: dict[str, list[str]] | None = None,
 ) -> SuiteResult:
     """Verdicts for the NEW table version, computed by re-validating only the
@@ -358,7 +357,7 @@ def revalidate_incremental(
         suite, old_tables, new_tables, targets, compare_cols=compare_cols
     )
     return _run_restricted_and_merge(
-        spark, suite, new_tables, old_verdicts, old_violations, targets, pops, config
+        spark, suite, new_tables, old_verdicts, old_violations, targets, pops
     )
 
 
@@ -370,7 +369,6 @@ def revalidate_incremental_from_changelogs(
     old_verdicts: DataFrame,
     old_violations: DataFrame | None = None,
     target_shapes: list[str] | None = None,
-    config: EngineConfig | None = None,
 ) -> SuiteResult:
     """:func:`revalidate_incremental` with the version diff replaced by
     per-table changelog relations (Iceberg changelog view /
@@ -383,7 +381,7 @@ def revalidate_incremental_from_changelogs(
         suite, changelogs, new_tables, targets
     )
     return _run_restricted_and_merge(
-        spark, suite, new_tables, old_verdicts, old_violations, targets, pops, config
+        spark, suite, new_tables, old_verdicts, old_violations, targets, pops
     )
 
 
@@ -395,7 +393,6 @@ def _run_restricted_and_merge(
     old_violations: DataFrame | None,
     targets: list[str],
     pops: dict[str, DataFrame],
-    config: EngineConfig | None,
 ) -> SuiteResult:
     res = run_suite(
         spark,
@@ -403,7 +400,6 @@ def _run_restricted_and_merge(
         new_tables,
         target_shapes=targets,
         target_population={n: pops[n] for n in targets if n in pops},
-        config=config,
         # cyclic groups iterate their fixpoint ONLY over the (closed)
         # affected populations, reading unchanged entities' verdicts from
         # the prior run instead of rescanning the tables

@@ -162,6 +162,11 @@ def local_name(term: str) -> str:
     return t
 
 
+# SPARQL prefixed name (CURIE). A local name may contain '.' but cannot end
+# in one, so a statement-ending '.' written without a space stays out.
+_PNAME = r"[\w.\-]*:[\w\-](?:[\w.\-]*[\w\-])?"
+
+
 # ---------------------------------------------------------------------------
 # intermediate representation
 # ---------------------------------------------------------------------------
@@ -204,7 +209,7 @@ class ShaclShape:
             return None
         m = re.fullmatch(
             r"\s*SELECT\s+\?(\w+)\s+WHERE\s*\{\s*\?(\w+)\s+a\s+"
-            r"(<[^>]*>|[\w.\-]*:[\w.\-]+)\s*\.?\s*\}\s*",
+            rf"(<[^>]*>|{_PNAME})\s*\.?\s*\}}\s*",
             self.target_query,
             re.IGNORECASE,
         )
@@ -214,9 +219,9 @@ class ShaclShape:
 
 
 _TRIPLE_RE = re.compile(
-    r"(\?\w+|<[^>]*>|[\w.\-]*:[\w.\-]+)\s+"            # subject
-    r"(a|\^?<[^>]*>|\^?[\w.\-]*:[\w.\-]+)\s+"          # predicate (^ = inverse)
-    r"(\?\w+|<[^>]*>|[\w.\-]*:[\w.\-]+|'[^']*'|\"[^\"]*\"|[+-]?\d+(?:\.\d+)?)"  # object
+    rf"(\?\w+|<[^>]*>|{_PNAME})\s+"            # subject
+    rf"(a|\^?<[^>]*>|\^?{_PNAME})\s+"          # predicate (^ = inverse)
+    rf"(\?\w+|<[^>]*>|{_PNAME}|'[^']*'|\"[^\"]*\"|[+-]?\d+(?:\.\d+)?)"  # object
 )
 _FILTER_RE = re.compile(r"FILTER\s*\(\s*(\?\w+)\s*(=|!=|<=|>=|<|>)\s*"
                         r"('[^']*'|\"[^\"]*\"|[+-]?\d+(?:\.\d+)?|\?\w+)\s*\)",
@@ -297,8 +302,10 @@ def star_target_filter(query: str, binding: "ShapeBinding") -> str | None:
             elif tok.startswith(("'", '"')) and tok.endswith(tok[0]) and len(tok) >= 2:
                 terms.append(_sql_str(tok[1:-1]))
             elif re.fullmatch(r"[+-]?\d+(?:\.\d+)?", tok):
-                terms.append(tok)  # numeric ids pass through unquoted
-            elif re.fullmatch(r"[\w.\-]*:[\w.\-]+", tok):
+                # quoted like every other entry: one IN-list type, so Spark
+                # never coerces the entity column to a mixed list's type
+                terms.append(_sql_str(tok))
+            elif re.fullmatch(_PNAME, tok):
                 terms.append(_sql_str(local_name(tok)))
             else:
                 raise ValueError(

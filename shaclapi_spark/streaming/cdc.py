@@ -42,7 +42,6 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from shaclapi_spark import revalidate
-from shaclapi_spark.engine import EngineConfig
 from shaclapi_spark.suite import Suite
 
 _DELETES = ("DELETE", "UPDATE_BEFORE")
@@ -84,7 +83,6 @@ def revalidate_changelog_stream(
     changelog_dir: str,
     state_dir: str,
     initial_tables: dict[str, DataFrame],
-    config: EngineConfig | None = None,
     max_files_per_trigger: int | None = None,
 ) -> int:
     """Drain all currently-available changelog files for ``table_name``
@@ -108,7 +106,7 @@ def revalidate_changelog_stream(
         initial_tables[table_name].write.mode("overwrite").parquet(
             os.path.join(table_root, "v0")
         )
-        res = run_suite(spark, suite, initial_tables, config=config)
+        res = run_suite(spark, suite, initial_tables)
         res.verdicts.write.mode("overwrite").parquet(
             os.path.join(verdict_root, "v0")
         )
@@ -149,7 +147,6 @@ def revalidate_changelog_stream(
             {table_name: batch_df, **other_cls},
             tables,
             prev_verdicts,
-            config=config,
         )
         inc.verdicts.write.mode("overwrite").parquet(
             os.path.join(verdict_root, f"v{ver}")

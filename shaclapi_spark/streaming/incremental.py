@@ -20,25 +20,22 @@ blocking fallback when per-tuple decisions are impossible
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from shaclapi_spark.engine import EngineConfig
-from shaclapi_spark.ops import audio as audio_ops
-from shaclapi_spark.ops.row_checks import describe, row_predicate
+from shaclapi_spark.engine import ShapeEvaluator
 from shaclapi_spark.suite import ROW_KINDS, Constraint, Shape, Suite
 
 
 def _row_constraints(shape: Shape) -> list[Constraint]:
-    """Top-level constraints decidable on a single row (no OR-groups with
-    non-row branches, no entity aggregation). audio_valid branches are
-    excluded from OR-group admissibility: row_predicate cannot evaluate the
-    Arrow-UDF check inside a disjunction (it is handled as a standalone
-    column via with_audio_check only)."""
+    """Top-level constraints decidable on a single row (no entity
+    aggregation, no OR-groups with non-row branches). OR-groups with an
+    audio_valid branch are left to the batch path as well."""
     out: list[Constraint] = []
     for c in shape.constraints:
-        if c.kind in ROW_KINDS or c.kind == "audio_valid":
+        if c.kind in ROW_KINDS:
             out.append(c)
         elif c.kind == "or_group" and all(
             b.kind in ROW_KINDS and b.kind != "audio_valid" for b in c.branches
@@ -47,96 +44,17 @@ def _row_constraints(shape: Shape) -> list[Constraint]:
     return out
 
 
-def row_verdict_stream(
-    df: DataFrame, shape: Shape, config: EngineConfig | None = None
-) -> tuple[DataFrame, DataFrame]:
+def row_verdict_stream(df: DataFrame, shape: Shape) -> tuple[DataFrame, DataFrame]:
     """Per-row (verdicts, violations) for the row-decidable subset of
-    ``shape`` — a pure map-side plan (no shuffle), valid on both batch and
-    streaming DataFrames. Audio checks short-circuit on rows already
-    invalidated by cheap checks, the streaming analog of the reference's
-    early-fail propagation."""
-    cfg = config or EngineConfig()
-    cs = _row_constraints(shape)
-    if shape.target_filter:
-        df = df.filter(F.expr(shape.target_filter))
-    # derived columns (Shape.derived_columns): same derive-once-check-many
-    # projection as the batch engine, so expr constraints referencing them
-    # (e.g. the image suite's __img_ok) stream unchanged
-    for dname, dsql in (shape.derived_columns or {}).items():
-        df = df.withColumn(dname, F.expr(dsql))
-
-    cols: dict[str, Column] = {}
-    cheap_names: list[str] = []
-    for c in cs:
-        if c.kind == "audio_valid":
-            continue
-        name = f"b_{c.id}"
-        if c.kind == "or_group":
-            pred = F.lit(False)
-            for b in c.branches:
-                pred = pred | F.coalesce(row_predicate(b), F.lit(True))
-        else:
-            pred = row_predicate(c)
-        df = df.withColumn(name, pred)
-        cols[c.id] = F.col(name)
-        cheap_names.append(name)
-
-    for c in cs:
-        if c.kind != "audio_valid":
-            continue
-        name = f"b_{c.id}"
-        pre = F.lit(True)
-        if cfg.short_circuit:
-            for n in cheap_names:
-                pre = pre & F.coalesce(F.col(n), F.lit(True))
-        df = audio_ops.with_audio_check(
-            df,
-            name,
-            c.params["column"],
-            float(c.params.get("min_snr_db", cfg.min_snr_db)),
-            precondition=pre,
-        )
-        cols[c.id] = F.col(name)
-
-    valid = F.lit(True)
-    for c in cs:
-        valid = valid & F.coalesce(cols[c.id], F.lit(True))
-    reason = F.lit(None).cast("string")
-    for c in reversed(cs):
-        reason = F.when(
-            ~F.coalesce(cols[c.id], F.lit(True)), F.lit(c.id)
-        ).otherwise(reason)
-
-    ent = F.col(shape.entity_col).cast("string")
-    verdicts = df.select(
-        ent.alias("entity_id"),
-        F.lit(shape.name).alias("shape"),
-        valid.alias("is_valid"),
-        reason.alias("reason"),
-    )
-    viol_structs = [
-        F.when(
-            ~F.coalesce(cols[c.id], F.lit(True)),
-            F.struct(
-                F.lit(c.id).alias("constraint_id"),
-                F.lit(describe(c)).alias("detail"),
-            ),
-        )
-        for c in cs
-    ]
-    violations = df.select(
-        ent.alias("entity_id"),
-        F.lit(shape.name).alias("shape"),
-        F.explode(
-            F.filter(F.array(*viol_structs), lambda x: x.isNotNull())
-        ).alias("__v"),
-    ).select(
-        "entity_id",
-        "shape",
-        F.col("__v.constraint_id").alias("constraint_id"),
-        F.col("__v.detail").alias("detail"),
-    )
-    return verdicts, violations
+    ``shape`` — the engine's shape evaluator on ``shape`` restricted to
+    :func:`_row_constraints`. With no entity-grain constraint left the plan
+    is map-side only (no shuffle), valid on both batch and streaming
+    DataFrames, and verdicts and violations are exactly the batch
+    engine's for that subset."""
+    row_shape = dataclasses.replace(shape, constraints=_row_constraints(shape))
+    return ShapeEvaluator(
+        df.sparkSession, row_shape, {shape.table: df}, {}
+    ).evaluate()
 
 
 def write_batch_outputs(
@@ -144,7 +62,6 @@ def write_batch_outputs(
     batch_df: DataFrame,
     shape: Shape,
     batch_id: int,
-    config: EngineConfig | None = None,
 ) -> int:
     """IDEMPOTENT per-batch output: foreachBatch gives at-least-once
     delivery (a crash after the write but before the checkpoint commit
@@ -156,7 +73,7 @@ def write_batch_outputs(
     count action)."""
     from pyspark.sql import Observation
 
-    vd, vl = row_verdict_stream(batch_df, shape, config)
+    vd, vl = row_verdict_stream(batch_df, shape)
     vd = vd.withColumn("batch_id", F.lit(batch_id))
     vl = vl.withColumn("batch_id", F.lit(batch_id))
 
@@ -190,7 +107,6 @@ def validate_stream(
     source_dir: str,
     schema,
     out_dir: str,
-    config: EngineConfig | None = None,
     max_files_per_trigger: int | None = None,
     metrics: "MetricsRecorder | None" = None,
 ) -> int:
@@ -222,7 +138,7 @@ def validate_stream(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         tb = _time.time()
-        n_rows = write_batch_outputs(out_dir, batch_df, shape, batch_id, config)
+        n_rows = write_batch_outputs(out_dir, batch_df, shape, batch_id)
         if metrics is not None:
             metrics.record(f"batch_{batch_id}", _time.time() - tb, n_rows)
             metrics.mark_first("first_verdict_sec", since_ts=t0, n_rows=n_rows)

@@ -74,6 +74,17 @@ def test_metrics_recorder_ring_buffer():
     assert rec.trace[-1][1] == 12
 
 
+def test_mark_first_exactly_once_after_eviction():
+    """A first-emission row is recorded once even after the ring buffer
+    has evicted it."""
+    rec = MetricsRecorder(run_id="svc", max_rows=2)
+    rec.mark_first("first", since_ts=0.0)
+    rec.record("a", 0.1)
+    rec.record("b", 0.1)
+    rec.mark_first("first", since_ts=0.0)
+    assert [r[1] for r in rec.rows] == ["a", "b"]
+
+
 def test_run_anytime_mode(spark, fixture_tables, tmp_path):
     from shaclapi_spark import api, fixtures
     from shaclapi_spark.lineage import LineageRun

@@ -11,14 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from shaclapi_spark import fixtures, revalidate
-from shaclapi_spark.engine import EngineConfig, run_suite
+from shaclapi_spark.engine import run_suite
 from shaclapi_spark.streaming import (
     apply_changelog,
     latest_verdicts,
     revalidate_changelog_stream,
 )
-
-CFG = EngineConfig(short_circuit=True)
 
 
 def _sets(verdicts):
@@ -47,7 +45,7 @@ def test_cdc_stream_matches_full_run(spark, cdc_setup):
     old, src, state = cdc_setup
     suite = fixtures.clip_suite(include_audio=True, include_drift=False)
     n = revalidate_changelog_stream(
-        spark, suite, "clips", src, state, old, config=CFG,
+        spark, suite, "clips", src, state, old,
         max_files_per_trigger=1,
     )
     assert n == 3
@@ -57,7 +55,7 @@ def test_cdc_stream_matches_full_run(spark, cdc_setup):
     final_clips = apply_changelog(old["clips"], full_cl)
     tables = dict(old)
     tables["clips"] = final_clips
-    expected = run_suite(spark, suite, tables, config=CFG).verdicts
+    expected = run_suite(spark, suite, tables).verdicts
 
     got = latest_verdicts(spark, state)
     assert _sets(got) == _sets(expected)
@@ -68,7 +66,7 @@ def test_cdc_stream_matches_full_run(spark, cdc_setup):
 
     # checkpoint resume: a second drain with no new files is a no-op
     n2 = revalidate_changelog_stream(
-        spark, suite, "clips", src, state, old, config=CFG,
+        spark, suite, "clips", src, state, old,
         max_files_per_trigger=1,
     )
     assert n2 == 0
@@ -79,7 +77,7 @@ def test_cdc_stream_picks_up_new_files(spark, cdc_setup):
     old, src, state = cdc_setup
     suite = fixtures.clip_suite(include_audio=False, include_drift=False)
     revalidate_changelog_stream(
-        spark, suite, "clips", src, state, old, config=CFG
+        spark, suite, "clips", src, state, old
     )
 
     # a late-arriving changelog file: delete a slice of clips
@@ -88,14 +86,14 @@ def test_cdc_stream_picks_up_new_files(spark, cdc_setup):
     late.coalesce(1).write.mode("append").parquet(src)
 
     n = revalidate_changelog_stream(
-        spark, suite, "clips", src, state, old, config=CFG
+        spark, suite, "clips", src, state, old
     )
     assert n == 1
 
     full_cl = spark.read.parquet(src)
     tables = dict(old)
     tables["clips"] = apply_changelog(old["clips"], full_cl)
-    expected = run_suite(spark, suite, tables, config=CFG).verdicts
+    expected = run_suite(spark, suite, tables).verdicts
     assert _sets(latest_verdicts(spark, state)) == _sets(expected)
 
 

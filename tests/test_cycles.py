@@ -98,3 +98,35 @@ def test_cycle_verdicts_complete(cycle_result, fixture_tables):
     }
     assert counts["ClipShape"] == n_clips
     assert counts["TranscriptShape"] == n_tr
+
+
+def test_unconverged_fixpoint_raises(spark):
+    """A self-referencing chain of 14 nodes, each needing at least one valid
+    child: invalidity climbs one node per round from the childless tail, so
+    the fixpoint needs more rounds than the bound. The engine must refuse to
+    publish the partial verdicts instead of reporting the head nodes valid."""
+    from shaclapi_spark.suite import Constraint, Shape, Suite
+
+    n = 14
+    nodes = spark.createDataFrame(
+        [(i, i - 1 if i else None) for i in range(n)], "id long, parent long"
+    )
+    suite = Suite(
+        shapes=[
+            Shape(
+                name="Node",
+                table="nodes",
+                entity_col="id",
+                constraints=[
+                    Constraint(
+                        "has_valid_child",
+                        "qualified_shape",
+                        {"child": "nodes", "fk": "parent", "shape": "Node", "min": 1},
+                    )
+                ],
+            )
+        ]
+    )
+    assert n > engine.MAX_FIXPOINT_ITERS
+    with pytest.raises(ValueError, match=r"\['Node'\].*10 rounds"):
+        engine.run_suite(spark, suite, {"nodes": nodes})

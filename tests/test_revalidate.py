@@ -9,9 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from shaclapi_spark import fixtures, revalidate
-from shaclapi_spark.engine import EngineConfig, run_suite
-
-CFG = EngineConfig(short_circuit=True)
+from shaclapi_spark.engine import run_suite
 
 
 @pytest.fixture(scope="module")
@@ -38,10 +36,10 @@ def _sets(verdicts):
 def test_incremental_equals_full_run(spark, versions):
     old, new = versions
     suite = fixtures.clip_suite(include_audio=True, include_drift=False)
-    old_res = run_suite(spark, suite, old, config=CFG)
-    full_new = run_suite(spark, suite, new, config=CFG)
+    old_res = run_suite(spark, suite, old)
+    full_new = run_suite(spark, suite, new)
     inc = revalidate.revalidate_incremental(
-        spark, suite, old, new, old_res.verdicts, config=CFG
+        spark, suite, old, new, old_res.verdicts
     )
     assert _sets(inc.verdicts) == _sets(full_new.verdicts)
 
@@ -62,8 +60,8 @@ def test_affected_covers_every_flip(spark, versions):
     # be inside the affected population (soundness of the superset)
     old, new = versions
     suite = fixtures.clip_suite(include_audio=False, include_drift=False)
-    old_v = _sets(run_suite(spark, suite, old, config=CFG).verdicts)
-    new_v = _sets(run_suite(spark, suite, new, config=CFG).verdicts)
+    old_v = _sets(run_suite(spark, suite, old).verdicts)
+    new_v = _sets(run_suite(spark, suite, new).verdicts)
     pops = revalidate.affected_populations(suite, old, new)
     affected = {
         "ClipShape": {r[0] for r in pops["ClipShape"].collect()},
@@ -79,8 +77,8 @@ def test_affected_covers_every_flip(spark, versions):
 def test_violations_merge_matches_full_run(spark, versions):
     old, new = versions
     suite = fixtures.clip_suite(include_audio=False, include_drift=False)
-    old_res = run_suite(spark, suite, old, config=CFG)
-    full_new = run_suite(spark, suite, new, config=CFG)
+    old_res = run_suite(spark, suite, old)
+    full_new = run_suite(spark, suite, new)
     inc = revalidate.revalidate_incremental(
         spark,
         suite,
@@ -88,7 +86,6 @@ def test_violations_merge_matches_full_run(spark, versions):
         new,
         old_res.verdicts,
         old_violations=old_res.violations,
-        config=CFG,
     )
     from collections import Counter
 
@@ -117,10 +114,10 @@ def test_cyclic_incremental_equals_full_run(spark, versions):
     # merge must equal a full fixpoint run on the new version
     old, new = versions
     suite = fixtures.clip_cycle_suite()
-    old_res = run_suite(spark, suite, old, config=CFG)
-    full_new = run_suite(spark, suite, new, config=CFG)
+    old_res = run_suite(spark, suite, old)
+    full_new = run_suite(spark, suite, new)
     inc = revalidate.revalidate_incremental(
-        spark, suite, old, new, old_res.verdicts, config=CFG
+        spark, suite, old, new, old_res.verdicts
     )
     assert _sets(inc.verdicts) == _sets(full_new.verdicts)
 
@@ -134,13 +131,12 @@ def test_cyclic_affected_closed_and_restricted(spark, versions):
     n_clips = new["clips"].select("clip_id").distinct().count()
     n_aff = pops["ClipShape"].count()
     assert 0 < n_aff < 0.5 * n_clips
-    old_res = run_suite(spark, suite, old, config=CFG)
+    old_res = run_suite(spark, suite, old)
     res = run_suite(
         spark,
         suite,
         new,
         target_population={n: pops[n] for n in pops},
-        config=CFG,
         cyclic_seed_verdicts=old_res.verdicts,
     )
     fresh_clip = res.verdicts_by_shape["ClipShape"].count()
@@ -178,10 +174,10 @@ def test_incremental_three_level_dag(spark):
     )
     new["orders"] = old["orders"].filter(~(F.col("o_orderkey") % 37 == 3))
 
-    old_res = run_suite(spark, suite, old, config=CFG)
-    full_new = run_suite(spark, suite, new, config=CFG)
+    old_res = run_suite(spark, suite, old)
+    full_new = run_suite(spark, suite, new)
     inc = revalidate.revalidate_incremental(
-        spark, suite, old, new, old_res.verdicts, config=CFG
+        spark, suite, old, new, old_res.verdicts
     )
     assert _sets(inc.verdicts) == _sets(full_new.verdicts)
 
@@ -201,10 +197,10 @@ def test_compare_cols_narrowing(spark, versions):
         "clips": ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"],
         "transcripts": ["transcript_id", "clip_id", "text", "lang", "n_tokens"],
     }
-    old_res = run_suite(spark, suite, old, config=CFG)
-    full_new = run_suite(spark, suite, new, config=CFG)
+    old_res = run_suite(spark, suite, old)
+    full_new = run_suite(spark, suite, new)
     inc = revalidate.revalidate_incremental(
-        spark, suite, old, new, old_res.verdicts, config=CFG, compare_cols=cc
+        spark, suite, old, new, old_res.verdicts, compare_cols=cc
     )
     assert _sets(inc.verdicts) == _sets(full_new.verdicts)
 
@@ -223,10 +219,10 @@ def test_changelog_path_equals_full_rerun(spark, versions):
     assert "_change_type" in cls["clips"].columns
     assert set(cls["clips"].columns) - {"_change_type"} == set(old["clips"].columns)
 
-    old_res = run_suite(spark, suite, old, config=CFG)
-    full_new = run_suite(spark, suite, new, config=CFG)
+    old_res = run_suite(spark, suite, old)
+    full_new = run_suite(spark, suite, new)
     inc = revalidate.revalidate_incremental_from_changelogs(
-        spark, suite, cls, new, old_res.verdicts, config=CFG
+        spark, suite, cls, new, old_res.verdicts
     )
     assert _sets(inc.verdicts) == _sets(full_new.verdicts)
 
@@ -247,10 +243,10 @@ def test_changelog_cyclic_equals_full_rerun(spark, versions):
         t: revalidate.synthesize_changelog(old[t], new[t])
         for t in ("clips", "transcripts")
     }
-    old_res = run_suite(spark, suite, old, config=CFG)
-    full_new = run_suite(spark, suite, new, config=CFG)
+    old_res = run_suite(spark, suite, old)
+    full_new = run_suite(spark, suite, new)
     inc = revalidate.revalidate_incremental_from_changelogs(
-        spark, suite, cls, new, old_res.verdicts, config=CFG
+        spark, suite, cls, new, old_res.verdicts
     )
     assert _sets(inc.verdicts) == _sets(full_new.verdicts)
 
@@ -341,10 +337,10 @@ def test_cyclic_group_with_outside_referrer(spark):
     )
     old = {"a": a, "b": b, "x": x_old}
     new = {"a": a, "b": b, "x": x_new}
-    old_res = run_suite(spark, suite, old, config=CFG)
-    full_new = run_suite(spark, suite, new, config=CFG)
+    old_res = run_suite(spark, suite, old)
+    full_new = run_suite(spark, suite, new)
     inc = revalidate.revalidate_incremental(
-        spark, suite, old, new, old_res.verdicts, config=CFG
+        spark, suite, old, new, old_res.verdicts
     )
     assert _sets(inc.verdicts) == _sets(full_new.verdicts)
     # the specific verdict the pre-fix engine flipped:

@@ -402,6 +402,33 @@ def test_star_query_values_seeded():
          "VALUES ?x { <http://ex/e1> <http://ex/e2> } }")
     got = star_target_filter(q, _star_binding())
     assert got == "id IN ('e1', 'e2') AND name IS NOT NULL"
+    # numeric entries are quoted too: the IN list never mixes types
+    got = star_target_filter(
+        "SELECT ?x WHERE { VALUES ?x { ex:e1 7 } }", _star_binding()
+    )
+    assert got == "id IN ('e1', '7')"
+    got = star_target_filter(
+        "SELECT ?x WHERE { VALUES ?x { 7 -2 3.5 } }", _star_binding()
+    )
+    assert got == "id IN ('7', '-2', '3.5')"
+
+
+def test_star_query_statement_dot_without_space():
+    """A statement-ending '.' written without a space is not part of the
+    prefixed name before it (a SPARQL local name cannot end in '.')."""
+    from shaclapi_spark.shacl import ShaclShape, star_target_filter
+
+    got = star_target_filter(
+        "SELECT ?x WHERE { ?x ex:status ex:active. }", _star_binding()
+    )
+    assert got == "status = 'active'"
+    got = star_target_filter(
+        "SELECT ?x WHERE { ?x a ex:Clip.\n?x ex:status ex:on.hold. }",
+        _star_binding(),
+    )
+    assert got == "cls = 'Clip' AND status = 'on.hold'"
+    shape = ShaclShape(name="S", target_query="SELECT ?v WHERE { ?v a ex:Clip. }")
+    assert shape.query_target_class() == "Clip"
 
 
 def test_star_query_accepted_in_to_suite():
@@ -545,7 +572,7 @@ def test_star_query_curie_and_numeric_values_entries():
         "SELECT ?x WHERE { ?x <http://ex/name> ?n . VALUES ?x { ex:e1 7 } }",
         _star_binding(),
     )
-    assert got == "id IN ('e1', 7) AND name IS NOT NULL"
+    assert got == "id IN ('e1', '7') AND name IS NOT NULL"
     with pytest.raises(ValueError, match="unrecognized VALUES entry"):
         star_target_filter(
             "SELECT ?x WHERE { ?x <http://ex/name> ?n . VALUES ?x { ??bad } }",

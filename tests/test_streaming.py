@@ -171,3 +171,51 @@ def test_streaming_first_verdict_latency(spark, stream_dirs):
     assert answers[-1] == sum(t[3] for t in rec.trace)
     times = [t[2] for t in rec.trace]
     assert times == sorted(times)
+
+
+def test_row_verdict_stream_equals_batch_engine(spark):
+    """Streaming row validation and run_suite share one evaluator: on a
+    row-decidable shape their verdicts and (entity_id, constraint_id)
+    violations are equal. The row-only OR-group must not gate the audio
+    decode, or streaming drops audio violations the batch run reports."""
+    import collections
+
+    from shaclapi_spark import datagen
+    from shaclapi_spark.engine import run_suite
+    from shaclapi_spark.suite import Constraint, Shape, Suite
+
+    clips = datagen.clips_df(spark, 2000).localCheckpoint(eager=True)
+    shape = Shape(
+        name="RowShape",
+        table="clips",
+        entity_col="clip_id",
+        constraints=[
+            Constraint("sr_range", "range", {"column": "sr_hz", "min": 8000, "max": 48000}),
+            Constraint(
+                "short_or_pcm",
+                "or_group",
+                branches=[
+                    Constraint("or_pcm", "expr", {"sql": "codec = 'pcm_s16le'"}),
+                    Constraint("or_short", "expr", {"sql": "dur_ms <= 1000"}),
+                ],
+            ),
+            Constraint("pcm_snr", "audio_valid", {"column": "bytes"}),
+        ],
+    )
+    batch = run_suite(spark, Suite(shapes=[shape]), {"clips": clips})
+    s_vd, s_vl = row_verdict_stream(clips, shape)
+
+    def verdicts(df):
+        return collections.Counter(
+            (r.entity_id, r.is_valid, r.reason) for r in df.collect()
+        )
+
+    def violations(df):
+        return collections.Counter(
+            (r.entity_id, r.constraint_id) for r in df.collect()
+        )
+
+    assert verdicts(s_vd) == verdicts(batch.verdicts)
+    b_vl = violations(batch.violations)
+    assert violations(s_vl) == b_vl
+    assert {c for _, c in b_vl} == {"sr_range", "short_or_pcm", "pcm_snr"}
